@@ -99,7 +99,10 @@ def cached_columns(key: tuple, build):
     if val is None:
         val = build()
         with _COL_CACHE_LOCK:
-            _COL_CACHE[key] = val
+            # the context may have changed while ``build`` ran; a value
+            # built against the old one is returned but never cached
+            if _COL_CACHE_CTX is sc:
+                _COL_CACHE[key] = val
     return val
 
 

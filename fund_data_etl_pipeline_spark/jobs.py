@@ -27,9 +27,13 @@ by the same generic machinery (SURVEY §7.0 "platforms are data, not code").
 
 from __future__ import annotations
 
+import json
+import logging
+import os
+import time
 from collections import OrderedDict
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .functions import extract as X
@@ -52,6 +56,7 @@ from .operators.classify import (
     not_,
     text_has,
 )
+from .operators import aggregate, caching, sinks
 from .operators.normalize import dim_join, require_fields, split_quarantine, to_target
 from .schemas import (
     BT_PURCHASE_APPLY,
@@ -66,6 +71,9 @@ from .schemas import (
     MARKET_INTERBANK,
     TXN_COLS,
 )
+from .sources import corpus
+
+log = logging.getLogger(__name__)
 
 NAME = r"[^\n　 ]+"  # single-line product-name capture
 
@@ -2222,27 +2230,29 @@ def run_all(
     (main:501-527); here a single binaryFile scan + parse stage is
     persisted and every job is a filter over it — at 100 TB this is the
     difference between 9 corpus reads and 1.
-    Returns {job: output path | False (empty)} plus audit counts.
+
+    One pass per output: each output's plan executes exactly once, as its
+    write. Row counts are ``DataFrame.observe`` metrics of those writes,
+    so an empty output (no directory) costs no extra job, the ok/error
+    audit rides on the quarantine write, and ``dividend_merged`` merges
+    the dividend rows already written instead of re-running the dividend
+    extraction. The same counts, with the wall seconds of each output,
+    go to ``<out_dir>/_run_report.json`` and to one ``logging`` record.
+
+    Returns {job: output path | False (empty)}, ``<job>_excel`` paths
+    when ``excel``, ``quarantined`` (rows) and ``audit`` ({"ok": n,
+    "error": n}).
     """
-    from .operators.sinks import (
-        audit_summary,
-        excel_job_path,
-        write_excel_compat,
-        write_partitioned,
-        write_quarantine,
-    )
-    from .sources.corpus import load_corpus
-
-    from .operators.caching import persist_tracked
-
+    # sources, caching, sinks and the merge are called through their
+    # modules, so a tracer that rebinds module attributes sees every call.
+    #
     # eager consumer: every pipeline writes below, then the explicit
     # unpersist at the end reclaims; persist_tracked is the
     # exception-path backstop when run under a registry collector
-    parsed = persist_tracked(load_corpus(spark, corpus_root))
+    parsed = caching.persist_tracked(corpus.load_corpus(spark, corpus_root))
     ok = parsed.filter(F.col("status") == "ok").select(
         "doc_id", "filename", "rel_path", "text"
     )
-    errors = parsed.filter(F.col("status") == "error")
 
     def sub(keyword: str) -> DataFrame:
         return ok.filter(F.col("rel_path").contains(keyword))
@@ -2259,29 +2269,68 @@ def run_all(
         "manual_dividend": manual_dividend_job(ok, dim, run_date),
     }
     status: dict[str, object] = {}
-    for name, df in pipelines.items():
+    rows: dict[str, int] = {}
+    seconds: dict[str, float] = {}
+
+    def write(name: str, df: DataFrame) -> None:
+        """One observed write of output ``name`` (plus its Excel file)."""
+        t0 = time.perf_counter()
         path = f"{out_dir}/{name}"
-        status[name] = path if write_partitioned(df, path) else False
-        if excel and status[name]:
-            # reference-parity per-job Excel (reads back the tiny written
-            # parquet — no second execution of the pipeline plan)
-            status[f"{name}_excel"] = write_excel_compat(
-                spark.read.parquet(path), excel_job_path(out_dir, name)
+        # the sink keeps its own count for its empty guard and returns a
+        # bool; this one, on the same pass, is the report's row count
+        obs = Observation()
+        counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        status[name] = path if sinks.write_partitioned(counted, path) else False
+        rows[name] = obs.get["rows"]
+        if excel and status[name] and name in pipelines:
+            # reference-parity per-job Excel: reads back the tiny written
+            # parquet with the job's own schema and column order (partition
+            # inference would turn biz_date into a trailing int column)
+            status[f"{name}_excel"] = sinks.write_excel_compat(
+                spark.read.schema(df.schema).parquet(path).select(*df.columns),
+                sinks.excel_job_path(out_dir, name),
             )
-    status["dividend_merged"] = (
-        f"{out_dir}/dividend_merged"
-        if write_partitioned(
-            __import__(
-                "fund_data_etl_pipeline_spark.operators.aggregate",
-                fromlist=["dividend_merge"],
-            ).dividend_merge(pipelines["dividend"]),
-            f"{out_dir}/dividend_merged",
-        )
-        else False
+        seconds[name] = round(time.perf_counter() - t0, 3)
+
+    for name, df in pipelines.items():
+        write(name, df)
+    if status["dividend"]:
+        div = pipelines["dividend"]
+        write("dividend_merged", aggregate.dividend_merge(
+            spark.read.schema(div.schema).parquet(status["dividend"])
+            .select(*div.columns)
+        ))
+    else:
+        status["dividend_merged"] = False
+        rows["dividend_merged"] = 0
+
+    # the audit observation sits below the error filter, so the one
+    # quarantine write also counts every ok and error document
+    t0 = time.perf_counter()
+    audit = Observation()
+    audited = parsed.observe(
+        audit,
+        F.count(F.when(F.col("status") == "ok", 1)).alias("ok"),
+        F.count(F.when(F.col("status") == "error", 1)).alias("error"),
     )
-    status["quarantined"] = write_quarantine(errors, f"{out_dir}/quarantine")
-    status["audit"] = {
-        r["status"]: r["n"] for r in audit_summary(parsed).collect()
-    }
+    status["quarantined"] = sinks.write_quarantine(
+        audited.filter(F.col("status") == "error"), f"{out_dir}/quarantine"
+    )
+    status["audit"] = dict(audit.get)
+    seconds["quarantine"] = round(time.perf_counter() - t0, 3)
     parsed.unpersist()
+
+    report = {
+        "run_date": run_date,
+        "files": {"listed": sum(status["audit"].values()), **status["audit"]},
+        "rows": rows,
+        "empty_outputs": [name for name, n in rows.items() if not n],
+        "quarantined": status["quarantined"],
+        "seconds": seconds,
+    }
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "_run_report.json"), "w",
+              encoding="utf-8") as f:
+        json.dump(report, f, ensure_ascii=False, indent=1)
+    log.info("run_all report: %s", json.dumps(report, ensure_ascii=False))
     return status

@@ -10,6 +10,9 @@ partition-dependent, so the engine's canonical form sorts the distinct
 platforms — deterministic under any parallelism; `first()` likewise becomes
 `min()`. This is a documented semantic choice (SURVEY §2.14), not an
 accident.
+
+A2 — the processed/failed counters — is an observation on ``run_all``'s
+quarantine write (jobs.py), so counting costs no Spark job of its own.
 """
 
 from __future__ import annotations
@@ -44,7 +47,3 @@ def dividend_merge(
     merged = df.groupBy(*keys).agg(*aggs)
     return merged.select(*df.columns)
 
-
-def audit_counts(df: DataFrame, status_col: str = "status") -> DataFrame:
-    """A2 — processed/failed counters (dividend_extractor.py:1422-1438)."""
-    return df.groupBy(status_col).agg(F.count(F.lit(1)).alias("n"))

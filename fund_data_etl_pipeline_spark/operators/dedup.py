@@ -464,9 +464,10 @@ def grouped_bucket_pairs(
     BOUND (r14, VERDICT r13 #7): the all-pairs branch materializes the
     per-bucket pair array as ONE expression value — O(cap²) structs on a
     single group row at occupancy <= cap (above cap the doubling branch
-    emits O(occ·log occ)). That is fine at the shipped caps (32² = 496
-    pairs, 128² ≈ 8k pairs) but a cap of 10³ would make it a per-row
-    10⁶-struct array; tests/test_round14_fixes.py pins every shipped cap
+    emits O(occ·log occ)). The all-pairs branch emits C(cap,2) =
+    cap·(cap−1)/2 pairs: fine at the shipped caps (496 pairs at cap 32,
+    8,128 at cap 128) but a cap of 10³ would make it a per-row
+    ~5·10⁵-struct array; tests/test_round14_fixes.py pins every shipped cap
     under the documented ceiling so a future bump is a conscious
     decision, not a drive-by constant edit.
 

@@ -5,16 +5,35 @@ job-per-day output folder, e.g. dividend_extractor.py:1445-1453, becomes
 ``partitionBy(date)``). Excel is a driver-side compat shim over small
 outputs only — gated on openpyxl, CSV fallback otherwise. The quarantine
 sink persists the failure side-channel (S7) instead of a log line.
+
+One pass per sink: each parquet sink is ONE write that carries a
+``DataFrame.observe`` row count, read after the write returns. The count
+is the empty-result guard (under overwrite, no rows ⇒ no directory) and
+the sink's return value, so no sink runs its upstream plan a second time
+for an ``isEmpty`` or a read-back ``count``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..schemas import CN_NAMES
+
+
+def _write_observed(
+    df: DataFrame, path: str, mode: str, partition_cols: list[str]
+) -> int:
+    """Write ``df`` to parquet once and return the number of rows written,
+    observed on that same pass (read only after the write returns)."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(path)
+    return obs.get["rows"]
 
 
 def write_partitioned(
@@ -23,17 +42,23 @@ def write_partitioned(
     partition_cols: tuple[str, ...] = ("biz_date",),
     mode: str = "overwrite",
 ) -> bool:
-    """S6 — canonical parquet sink. Returns False on an empty result (the
-    reference's empty-result guard Q2 aborts the job instead of writing an
-    empty file, dividend_extractor.py:1440-1442)."""
-    if df.isEmpty():
-        return False
+    """S6 — canonical parquet sink: one write, one execution of ``df``'s
+    plan. Returns False on an empty result (the reference's empty-result
+    guard Q2 aborts the job instead of writing an empty file,
+    dividend_extractor.py:1440-1442).
+
+    Under ``overwrite`` an empty result leaves no directory: the write has
+    already replaced the old contents, and the directory it left is
+    deleted through the path's Hadoop ``FileSystem``. Under ``append`` an
+    empty result adds no rows and existing data stays as it was."""
     cols = [c for c in partition_cols if c in df.columns]
-    writer = df.write.mode(mode)
-    if cols:
-        writer = writer.partitionBy(*cols)
-    writer.parquet(path)
-    return True
+    if _write_observed(df, path, mode, cols):
+        return True
+    if mode == "overwrite":
+        sc = df.sparkSession.sparkContext
+        hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+        hpath.getFileSystem(sc._jsc.hadoopConfiguration()).delete(hpath, True)
+    return False
 
 
 def write_excel_compat(
@@ -99,15 +124,17 @@ def excel_job_path(out_dir: str, job: str) -> str:
 def write_quarantine(df: DataFrame, path: str) -> int:
     """S7 — persist failed/unmatched rows with their reason; returns the
     quarantined row count (the reference's failed-files counter,
-    dividend_extractor.py:1432-1438). Write first, count from the written
-    files — one execution of the upstream plan instead of count+write."""
-    df.write.mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    return spark.read.parquet(path).count()
+    dividend_extractor.py:1432-1438), observed on the write itself — one
+    execution of the upstream plan and no read-back. An empty quarantine
+    is still written, so the directory always exists after a run."""
+    return _write_observed(df, path, "overwrite", [])
 
 
 def audit_summary(parsed: DataFrame) -> DataFrame:
-    """A2 — per-status counts over the parsed corpus."""
+    """A2 — per-status counts over the parsed corpus. ``run_all`` takes
+    its ok/error counts from an observation on the quarantine write
+    instead; this stays as the standalone form, and the benchmark's
+    per-layer tracer (``perfbench/spans.py``) binds it by name."""
     return parsed.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
 
 

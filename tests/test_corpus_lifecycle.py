@@ -4,15 +4,20 @@ path pruning -> parse stage with failure side-channel -> 9 jobs -> sinks.
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fund_data_etl_pipeline_spark import jobs
 from fund_data_etl_pipeline_spark.operators.sinks import (
     write_excel_compat,
     write_partitioned,
+    write_quarantine,
 )
+from fund_data_etl_pipeline_spark.schemas import CN_NAMES, DIVIDEND_COLS
 from fund_data_etl_pipeline_spark.sources.corpus import (
     filter_filenames,
     load_corpus,
@@ -256,3 +261,166 @@ def test_manual_jobs_through_real_pdf_codec(spark, tmp_path):
         expected_set(FX.EXPECTED_MANUAL_REDEMPTION)
     assert rows_set(jobs.manual_dividend_job(ok, dim, FX.RUN_DATE)) == \
         expected_set(FX.EXPECTED_MANUAL_DIVIDEND)
+
+
+# --------------------------------------------------------------------------
+# One Spark pass per output: observed sinks, the merge over written rows,
+# and the run report
+# --------------------------------------------------------------------------
+
+# Spark jobs of run_all(excel=True) on the _build_tree corpus when every
+# sink ran an isEmpty before its write, the merge re-ran the dividend
+# extraction, and the quarantine and audit counts were a read-back count
+# and a collect
+TWO_PASS_RUN_ALL_JOBS = 58
+
+OUTPUT_EXPECTED = {
+    "dividend": FX.EXPECTED_DIVIDEND,
+    "purchase_apply": FX.EXPECTED_PURCHASE_APPLY,
+    "purchase_confirm": FX.EXPECTED_PURCHASE_CONFIRM,
+    "redemption_confirm": FX.EXPECTED_REDEMPTION,
+    "conversion": FX.EXPECTED_CONVERSION,
+    "manual_apply": FX.EXPECTED_MANUAL_APPLY,
+    "manual_confirm": FX.EXPECTED_MANUAL_CONFIRM,
+    "manual_redemption": FX.EXPECTED_MANUAL_REDEMPTION,
+    "manual_dividend": FX.EXPECTED_MANUAL_DIVIDEND,
+}
+
+
+@pytest.fixture(scope="module")
+def one_pass_run(spark, tmp_path_factory):
+    """One run_all(excel=True) on the fixture tree inside its own job
+    group: (status, out_dir, the group's job ids, the stage names of
+    those jobs)."""
+    tmp = tmp_path_factory.mktemp("one_pass")
+    root = _build_tree(tmp / "corpus")
+    dim = FX.dim_df(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("run-all-one-pass", "run_all one pass")
+    try:
+        status = jobs.run_all(
+            spark, str(root), dim, FX.RUN_DATE, str(tmp / "out"), excel=True
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup("run-all-one-pass")
+    stages = [
+        tracker.getStageInfo(sid).name
+        for jid in job_ids
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    return status, tmp / "out", job_ids, stages
+
+
+def test_write_partitioned_round_trips(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("20260115", 1.5), ("20260115", 2.25), ("20260116", 3.0)],
+        "biz_date string, x double",
+    )
+    path = str(tmp_path / "out")
+    assert write_partitioned(df, path) is True
+    back = spark.read.schema(df.schema).parquet(path).select(*df.columns)
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_write_partitioned_empty_overwrite_removes_directory(spark, tmp_path):
+    path = str(tmp_path / "out")
+    old = spark.createDataFrame([("20260114", 9.0)], "biz_date string, x double")
+    assert write_partitioned(old, path) is True
+    empty = old.filter("x < 0")
+    assert write_partitioned(empty, path) is False
+    assert not (tmp_path / "out").exists()
+
+
+def test_write_partitioned_empty_append_keeps_rows(spark, tmp_path):
+    path = str(tmp_path / "out")
+    old = spark.createDataFrame([("20260114", 9.0)], "biz_date string, x double")
+    assert write_partitioned(old, path) is True
+    assert write_partitioned(old.filter("x < 0"), path, mode="append") is False
+    assert spark.read.parquet(path).select("x").collect() == [(9.0,)]
+
+
+def test_write_quarantine_returns_observed_count(spark, tmp_path):
+    df = spark.createDataFrame([("a",), ("b",)], "error string")
+    assert write_quarantine(df, str(tmp_path / "q")) == 2
+    assert write_quarantine(df.filter("false"), str(tmp_path / "q")) == 0
+
+
+def test_run_all_runs_each_output_once(one_pass_run):
+    _status, _out, job_ids, stages = one_pass_run
+    assert not [s for s in stages
+                if s.split(" ")[0] in ("isEmpty", "count", "collect")], stages
+    assert len(job_ids) <= TWO_PASS_RUN_ALL_JOBS // 2, stages
+
+
+def test_run_report_counts(one_pass_run):
+    status, out, _job_ids, _stages = one_pass_run
+    report = json.loads((out / "_run_report.json").read_text("utf-8"))
+    files = report["files"]
+    assert files["listed"] == files["ok"] + files["error"]
+    assert files["ok"] == len(
+        FX.DIVIDEND_DOCS + FX.PURCHASE_APPLY_DOCS + FX.PURCHASE_CONFIRM_DOCS
+        + FX.REDEMPTION_DOCS + FX.CONVERSION_DOCS + FX.MANUAL_DOCS
+    )
+    assert files["error"] == 1  # the invalid-UTF-8 poison file
+    assert report["quarantined"] == files["error"] == status["quarantined"]
+    want = {name: len(rows) for name, rows in OUTPUT_EXPECTED.items()}
+    want["dividend_merged"] = len(FX.EXPECTED_DIVIDEND) - 1
+    assert report["rows"] == want
+    assert report["empty_outputs"] == []
+    assert set(report["seconds"]) == set(want) | {"quarantine"}
+    assert status["audit"] == {"ok": files["ok"], "error": files["error"]}
+
+
+def test_dividend_merged_equals_merge_of_dividend_job(spark, one_pass_run):
+    from test_fund_jobs import rows_set
+
+    from fund_data_etl_pipeline_spark.operators.aggregate import dividend_merge
+
+    status, _out, _job_ids, _stages = one_pass_run
+    div = jobs.dividend_job(
+        FX.docs_df(spark, FX.DIVIDEND_DOCS), FX.dim_df(spark), FX.RUN_DATE
+    )
+    written = spark.read.schema(div.schema).parquet(
+        status["dividend_merged"]).select(*div.columns)
+    assert rows_set(written) == rows_set(dividend_merge(div))
+
+
+def test_excel_read_back_keeps_target_schema(one_pass_run):
+    from test_xls_writer import _parse_biff_cells, _read_cfb_stream
+
+    status, _out, _job_ids, _stages = one_pass_run
+    with open(status["dividend_excel"], "rb") as f:
+        cells, _ = _parse_biff_cells(_read_cfb_stream(f.read(), "Workbook"))
+    ncols = max(c for _r, c in cells) + 1
+    assert [cells[(0, c)] for c in range(ncols)] == [
+        CN_NAMES.get(c, c) for c in DIVIDEND_COLS
+    ]
+    date_col = DIVIDEND_COLS.index("biz_date")
+    assert cells[(1, date_col)] == "20260115"
+
+
+def test_run_report_is_logged(spark, tmp_path, caplog):
+    root = tmp_path / "corpus"
+    for _doc_id, filename, rel, text in FX.MANUAL_DOCS:
+        d = root / rel
+        d.mkdir(parents=True, exist_ok=True)
+        (d / filename).write_text(text, encoding="utf-8")
+    out = tmp_path / "out"
+    with caplog.at_level(logging.INFO, logger="fund_data_etl_pipeline_spark"):
+        status = jobs.run_all(spark, str(root), FX.dim_df(spark), FX.RUN_DATE,
+                              str(out))
+    records = [r for r in caplog.records if r.name.startswith(
+        "fund_data_etl_pipeline_spark") and "run_all report" in r.getMessage()]
+    assert len(records) == 1
+    logged = json.loads(records[0].getMessage().split(": ", 1)[1])
+    assert logged == json.loads((out / "_run_report.json").read_text("utf-8"))
+    assert logged["files"] == {
+        "listed": len(FX.MANUAL_DOCS), "ok": len(FX.MANUAL_DOCS), "error": 0}
+    assert logged["quarantined"] == status["quarantined"] == 0
+    # no dividend rows: the merge is skipped and its output left unwritten
+    assert status["dividend"] is False and status["dividend_merged"] is False
+    assert "dividend_merged" in logged["empty_outputs"]
+    assert not (out / "dividend").exists()
+    assert not (out / "dividend_merged").exists()

@@ -7,7 +7,8 @@
   streaming fold's quantization twin);
 - the vectorized z-score fold (_zscore_fold_vec) emits exactly what the
   per-row scalar fold emits, across NULLs, deque carry-over, chunked
-  batches, the n_window ramp and the magnitude fallback.
+  batches, the n_window ramp and the magnitude fallback;
+- cached_columns never caches a Column built across a SparkContext swap.
 """
 
 from __future__ import annotations
@@ -209,3 +210,33 @@ def test_running_totals_update_vectorized_sum_exact():
     assert n == len(vals)
     assert s_c == sum(cents_py(v) for v in vals if v is not None)
     assert out["n_events"].iloc[0] == len(vals)
+
+
+# ---------------------------------------------------------------------------
+# cached_columns under a SparkContext swap
+# ---------------------------------------------------------------------------
+
+
+def test_cached_columns_drops_value_built_across_context_swap(monkeypatch):
+    """A value whose ``build`` ran while the active context changed is
+    returned to its caller but never cached for the new context."""
+    from pyspark import SparkContext
+
+    from fund_data_etl_pipeline_spark.functions import text as T
+
+    old_ctx, new_ctx = object(), object()
+    monkeypatch.setattr(SparkContext, "_active_spark_context", old_ctx)
+    monkeypatch.setattr(T, "_COL_CACHE", {})
+    monkeypatch.setattr(T, "_COL_CACHE_CTX", None)
+
+    def build():
+        # another caller, under a new context, resets the cache meanwhile
+        monkeypatch.setattr(SparkContext, "_active_spark_context", new_ctx)
+        assert T.cached_columns(("other",), lambda: "fresh") == "fresh"
+        return "stale"
+
+    assert T.cached_columns(("k",), build) == "stale"
+    assert T._COL_CACHE_CTX is new_ctx
+    assert T._COL_CACHE == {("other",): "fresh"}
+    assert T.cached_columns(("k",), lambda: "rebuilt") == "rebuilt"
+    assert T._COL_CACHE[("k",)] == "rebuilt"
