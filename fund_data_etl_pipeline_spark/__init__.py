@@ -9,7 +9,9 @@ Layout
 - ``schemas``    explicit StructTypes for every dataset (no inference)
 - ``sources``    parquet star-schema loaders, document corpus, dimension tables
 - ``functions``  expression library: cleaning, extraction (P1-P16), text, vectors
-- ``operators``  classify, normalize, aggregate, dedup, similarity, multimodal
+- ``operators``  classify, normalize, aggregate, dedup, similarity, sinks, and
+                 the JPEG / CCITT fax decoders behind scanned-PDF images
+                 (plus standalone media codecs no job reaches yet)
 - ``plans``      registered queries (DataFrame builder + DuckDB oracle SQL)
 - ``streaming``  Structured Streaming file ingest + windowed aggregations
 """

@@ -1,5 +1,5 @@
-"""Minimal from-spec AVI demuxer for Motion-JPEG (the multimodal video
-stage's one real-frame path).
+"""Minimal from-spec AVI demuxer for Motion-JPEG (standalone: no job or
+query calls it).
 
 AVI is the RIFF container (the same public Microsoft/IBM chunk layout
 wav_codec.py walks) with nested LISTs, per the public AVIMAINHEADER /

@@ -1,11 +1,10 @@
 """Minimal from-spec CCITT Group 3/4 fax decoder (ITU-T T.4 / T.6).
 
-Seventh from-spec codec. Real-world scanned black-and-white documents —
-exactly the 万事如意-style manual-transaction scans the reference OCRs —
-are overwhelmingly CCITTFaxDecode inside PDF (§7.4.6) or Compression
-3/4 inside TIFF, so the scanned-PDF OCR front half
-(sources/corpus.ocr_scanned_pdf) needs this to turn a production scan
-into pixels. Scope:
+Real-world scanned black-and-white documents — exactly the
+万事如意-style manual-transaction scans the reference OCRs — are
+overwhelmingly CCITTFaxDecode inside PDF (§7.4.6), so the scanned-PDF
+OCR front half (sources/corpus.ocr_scanned_pdf) needs this to turn a
+production scan into pixels. Scope:
 
 - Modified Huffman (MH) run-length coding: the T.4 terminating
   (0-63) and make-up (64-1728) code tables for white and black runs
@@ -17,9 +16,9 @@ into pixels. Scope:
   set — Pass, Horizontal, and Vertical V(0)/VR(1-3)/VL(1-3) — decoded
   against the reference-line changing elements b1/b2, terminated by
   EOFB;
-- Group 3 mixed one/two-dimensional (T.4 §4.2, PDF /K > 0, TIFF
-  T4Options bit 0): EOL + tag-bit framing selecting MH or 2-D coding
-  per line, sharing the Group 4 mode decoder verbatim;
+- Group 3 mixed one/two-dimensional (T.4 §4.2, PDF /K > 0): EOL +
+  tag-bit framing selecting MH or 2-D coding per line, sharing the
+  Group 4 mode decoder verbatim;
 - output is a (rows, columns) uint8 array, 255 = white, 0 = black
   (the /BlackIs1 sense handled by the caller's bit packing).
 
@@ -127,7 +126,7 @@ _EOL = (12, 0b000000000001)
 
 class _Bits:
     """MSB-first bit reader — an integer accumulator refilled a byte at
-    a time (the flac_codec pattern), so the per-run peek/skip cycle in
+    a time, so the per-run peek/skip cycle in
     the MH decoder is shift/mask work instead of a bytes slice per
     probe. ``peek`` zero-pads past EOF so mode probes near the end of a
     strip stay simple."""

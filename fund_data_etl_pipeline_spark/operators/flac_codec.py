@@ -23,8 +23,8 @@ decode surface for streamable FLAC —
 - frame footer CRC-16 (poly 0x8005) verified over every frame.
 
 Anything malformed (bad sync, reserved codes, CRC mismatch, truncation)
-raises a NAMED ``ValueError`` so the multimodal stage quarantines the
-row (S7 semantics) instead of emitting wrong samples.
+raises a NAMED ``ValueError`` so a caller can quarantine the row (S7
+semantics) instead of emitting wrong samples.
 
 Bit-exactness is the point of a lossless codec, so the round-trip tests
 (tests/test_flac_codec.py) assert sample-for-sample equality against an

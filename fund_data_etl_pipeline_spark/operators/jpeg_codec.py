@@ -1,9 +1,9 @@
-"""Minimal from-spec baseline JPEG decoder (the multimodal image stage).
+"""Minimal from-spec baseline JPEG decoder (the /DCTDecode images of
+scanned PDFs).
 
-Fourth from-spec codec after operators/xls_writer.py (BIFF8/CFB),
-sources/pdf_text.py (ISO 32000) and operators/png_codec.py (W3C PNG):
-the container ships no image library, and ITU-T T.81 (the JPEG spec) is
-public, so the baseline-sequential subset that real corpora overwhelmingly
+A from-spec codec like operators/xls_writer.py (BIFF8/CFB) and
+sources/pdf_text.py (ISO 32000): the container ships no image library,
+and ITU-T T.81 (the JPEG spec) is public, so the baseline-sequential subset that real corpora overwhelmingly
 use is decoded here with stdlib + numpy:
 
 - marker stream: SOI, APPn/COM skipped, DQT (8-bit precision), SOF0
@@ -43,7 +43,7 @@ precision, 4-component CMYK/Adobe transforms, lossless with restart
 markers or subsampling. Round-trip tests in
 tests/test_jpeg_codec.py drive this decoder against independently
 written in-test baseline AND progressive ENCODERS (FDCT + Annex K
-tables), the xls_writer/pdf_text/png_codec strategy.
+tables), the xls_writer/pdf_text strategy.
 """
 
 from __future__ import annotations

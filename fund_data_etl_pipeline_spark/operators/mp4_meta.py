@@ -1,5 +1,5 @@
-"""Minimal from-spec MP4/ISO-BMFF metadata reader (the multimodal video
-stage's container half).
+"""Minimal from-spec MP4/ISO-BMFF metadata reader (standalone: no job or
+query calls it).
 
 ISO/IEC 14496-12 (the MP4 container) is a public spec and its metadata
 layer is pure structure — size+type box walk, big-endian fields — so the

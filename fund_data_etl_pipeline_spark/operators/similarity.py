@@ -571,7 +571,7 @@ def check_dims(df: DataFrame, vec_col: str, dims: int) -> None:
     (semanticHash, column)) was tried for VERDICT r11 #5 and REVERTED
     after an apparent progressive same-session degradation (6.6 -> 28 s
     by the 5th rebuild). Round 13 root-caused that as HOST-VM NOISE,
-    not a code mechanism: tools/dims_memo_probe.py instrumented
+    not a code mechanism (BASELINE lesson 19): instrumented
     rebuild loops (per-rebuild wall/build/exec split, Spark-job time
     via the UI REST API, JVM GC time, persisted-RDD count) and the
     memoized form measured FLAT over 8 rebuilds (~6.5-10 s, zero cache

@@ -1,4 +1,4 @@
-"""Minimal from-spec PCM WAV decoder (the multimodal audio stage).
+"""Minimal from-spec PCM WAV decoder (standalone: no job or query calls it).
 
 Fifth from-spec codec after operators/xls_writer.py (BIFF8/CFB),
 sources/pdf_text.py (ISO 32000), operators/png_codec.py (W3C PNG) and

@@ -260,15 +260,15 @@ def fund_dividend_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     platform. Row values equal the golden counts x1000 — but the point is
     measuring the single-scan extract stage at volume (bench.py times
     this; at sf-independent 25k docs the per-doc cost is the signal).
-    ``tools/fund_cascade_probe.py`` drives the same builder at 10x/100x
-    this replication to fit the cascade's cost exponent (BASELINE.md)."""
+    The same builder at 10x/100x this replication fitted the cascade's
+    cost exponent (BASELINE.md §4.5)."""
     return dividend_scaled_agg(spark, 1000)
 
 
 def dividend_scaled_agg(spark: SparkSession, n: int) -> DataFrame:
     """The replicate-n -> full dividend cascade -> per-platform aggregate
-    plan, parameterized by replication so the scale probe can run the
-    SAME builder at 25k/250k/2.5M docs."""
+    plan, parameterized by replication so the SAME builder runs at
+    25k/250k/2.5M docs."""
     base = FX.docs_df(spark, FX.DIVIDEND_DOCS)
     replicated = base.crossJoin(
         spark.range(n).select(F.col("id").alias("rep"))

@@ -31,6 +31,7 @@ schema, and failure semantics are the real ones either way.
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import io
 from collections.abc import Iterator
@@ -46,19 +47,58 @@ PARSED_SCHEMA = (
 )
 
 
+def _zero_length_files(spark: SparkSession, root: str, glob: str) -> list:
+    """binaryFile rows (path, modificationTime, length, content) of the
+    zero-length files under ``root`` whose name matches ``glob``, skipping
+    any file or directory whose name starts with ``_`` or ``.`` (the
+    names Spark's file listing treats as hidden). A Hadoop FileSystem
+    listing on the driver: no Spark job. ``listStatus``, not
+    ``listFiles``: the located statuses of ``listFiles`` load each
+    file's permissions, which on a local filesystem without the native
+    Hadoop library forks a process per file."""
+    jvm = spark.sparkContext._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    )
+    name_ok = jvm.org.apache.hadoop.fs.GlobFilter(glob)
+    rows = []
+    dirs = [jvm.org.apache.hadoop.fs.Path(root)]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            path = st.getPath()
+            if path.getName().startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                dirs.append(path)
+            elif st.getLen() == 0 and name_ok.accept(path):
+                mtime = datetime.datetime.fromtimestamp(
+                    st.getModificationTime() / 1000, datetime.timezone.utc
+                )
+                rows.append((path.toString(), mtime, 0, bytearray()))
+    return rows
+
+
 def scan_binary_corpus(
     spark: SparkSession,
     root: str,
     path_keyword: str | None = None,
     glob: str = "*.pdf",
 ) -> DataFrame:
-    """S1 — recursive binary-file scan with path-predicate pruning."""
+    """S1 — recursive binary-file scan with path-predicate pruning.
+
+    Spark's file scan makes no split for a zero-length file, so the
+    binaryFile source never returns one. Those files are listed here on
+    the driver (same glob and hidden-name rule) and unioned in as
+    empty-content rows, so every listed file reaches the decode stage."""
     df = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", glob)
         .load(root)
     )
+    empty = _zero_length_files(spark, root, glob)
+    if empty:
+        df = df.unionByName(spark.createDataFrame(empty, df.schema))
     if path_keyword:
         # match the DIRECTORY part only (`"分红" in root`, not the file
         # name — dividend_extractor.py:1279-1281)

@@ -29,9 +29,9 @@ TABLE_NAMES = (
 # vector width per (parquet part file realpath, mtime_ns) — a plain
 # str/int dict, deliberately NOT keyed by any Spark plan object (the r12
 # semanticHash-keyed memo was reverted over a suspected session
-# coupling; r13 root-caused that as host-VM noise — tools/
-# dims_memo_probe.py, BASELINE lesson 19 — but a filesystem key is
-# still the right key: it invalidates exactly when the data changes)
+# coupling; r13 root-caused that as host-VM noise — BASELINE lesson
+# 19 — but a filesystem key is still the right key: it invalidates
+# exactly when the data changes)
 _VEC_WIDTH_CACHE: dict[tuple[str, int], int] = {}
 
 

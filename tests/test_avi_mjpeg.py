@@ -140,28 +140,3 @@ def test_avi_named_errors():
         read_avi_meta(write_avi(jpegs, w=24, h=16, handler=b"cvid"))
     with pytest.raises(ValueError, match="truncated|overruns"):
         read_avi_meta(blob[:-30])
-
-
-def test_avi_spark_video_paths(spark):
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_video_frames,
-        decode_video_meta,
-    )
-    from fund_data_etl_pipeline_spark.operators.jpeg_codec import decode_jpeg
-    from fund_data_etl_pipeline_spark.operators.png_codec import mean_luma
-
-    imgs, jpegs = _frames(n=7)
-    blob = write_avi(jpegs, w=24, h=16, fps=5.0)
-    rows = [(61, "video", blob, (24, 16, None, None, 5.0, 7))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    m = decode_video_meta(df).collect()[0]
-    assert (m["width"], m["height"], m["n_frames"]) == (24, 16, 7)
-    assert abs(m["fps"] - 5.0) < 1e-9
-
-    out = decode_video_frames(df, every_n=3).collect()
-    assert sorted(r["frame_index"] for r in out) == [0, 3, 6]
-    for r in out:
-        _, _, _, px = decode_jpeg(jpegs[r["frame_index"]])
-        assert abs(r["mean_luma"] - mean_luma(px)) < 1e-9

@@ -397,140 +397,6 @@ def test_pdf_ccitt_blackis1_flips_packed_sense():
         assert rec["data"] == bytes([expect, expect])
 
 
-# --- TIFF integration -------------------------------------------------
-
-
-def write_fax_tiff(
-    strips: list[bytes],
-    width: int,
-    height: int,
-    comp: int,
-    rows_per_strip: int,
-    photometric: int = 0,
-    t4options: int | None = None,
-    jpeg_tables: bytes | None = None,
-) -> bytes:
-    """Minimal little-endian 1-bit fax TIFF around pre-encoded strips
-    (doubles as the JPEG-in-TIFF builder via comp=7 + jpeg_tables)."""
-    import struct
-
-    entries = [
-        (256, 3, [width]),
-        (257, 3, [height]),
-        (258, 3, [1]),
-        (259, 3, [comp]),
-        (262, 3, [photometric]),
-        (273, 4, None),  # strip offsets, patched below
-        (277, 3, [1]),
-        (278, 3, [rows_per_strip]),
-        (279, 4, [len(s) for s in strips]),
-    ]
-    if t4options is not None:
-        entries.append((292, 4, [t4options]))
-    if jpeg_tables is not None:
-        entries.append((347, 7, list(jpeg_tables)))
-    entries.sort(key=lambda t: t[0])
-    ifd_off = 8
-    ifd_size = 2 + 12 * len(entries) + 4
-    ext = bytearray()
-    ext_base = ifd_off + ifd_size
-    data_base = None  # filled after ext is known
-
-    # first pass: lay out external arrays (counts > 1)
-    slots = []
-    for tag, ftype, vals in entries:
-        if vals is not None and len(vals) > 1:
-            slots.append((tag, ext_base + len(ext)))
-            unit = {1: "B", 3: "H", 4: "I", 7: "B"}[ftype]
-            ext += struct.pack(f"<{len(vals)}{unit}", *vals)
-    data_base = ext_base + len(ext)
-    offsets = []
-    pos = data_base
-    for s in strips:
-        offsets.append(pos)
-        pos += len(s)
-    if len(offsets) > 1:
-        slots.append((273, ext_base + len(ext)))
-        ext += struct.pack(f"<{len(offsets)}I", *offsets)
-        data_base = ext_base + len(ext)
-        offsets = [data_base + sum(len(x) for x in strips[:i])
-                   for i in range(len(strips))]
-        # re-patch the external offsets array with the final positions
-        ext[-4 * len(offsets):] = struct.pack(
-            f"<{len(offsets)}I", *offsets
-        )
-    out = bytearray(struct.pack("<2sHI", b"II", 42, ifd_off))
-    out += struct.pack("<H", len(entries))
-    ext_cursor = {tag: off for tag, off in slots}
-    for tag, ftype, vals in entries:
-        if tag == 273:
-            vals = offsets
-        count = len(vals)
-        out += struct.pack("<HHI", tag, ftype, count)
-        if count > 1:
-            out += struct.pack("<I", ext_cursor[tag])
-        else:
-            unit = {1: "B", 3: "H", 4: "I", 7: "B"}[ftype]
-            out += struct.pack(f"<{unit}", vals[0]).ljust(4, b"\x00")
-    out += struct.pack("<I", 0)  # no next IFD
-    out += ext
-    for s in strips:
-        out += s
-    return bytes(out)
-
-
-def test_tiff_g4_single_strip():
-    from fund_data_etl_pipeline_spark.operators.tiff_codec import decode_tiff
-
-    img = _text_like(rows=20, cols=72, seed=31)
-    blob = write_fax_tiff([encode_g4(img)], 72, 20, comp=4,
-                          rows_per_strip=20)
-    w, h, c, rgb = decode_tiff(blob)
-    assert (w, h, c) == (72, 20, 3)
-    assert np.array_equal(rgb[:, :, 0], img)
-
-
-def test_tiff_g4_multi_strip_restarts_reference():
-    from fund_data_etl_pipeline_spark.operators.tiff_codec import decode_tiff
-
-    img = _text_like(rows=12, cols=40, seed=17)
-    strips = [encode_g4(img[0:5]), encode_g4(img[5:10]),
-              encode_g4(img[10:12])]
-    blob = write_fax_tiff(strips, 40, 12, comp=4, rows_per_strip=5)
-    _, _, _, rgb = decode_tiff(blob)
-    assert np.array_equal(rgb[:, :, 0], img)
-
-
-def test_tiff_mh_and_g3_strips():
-    from fund_data_etl_pipeline_spark.operators.tiff_codec import decode_tiff
-
-    img = _text_like(rows=10, cols=56, seed=13)
-    blob2 = write_fax_tiff(
-        [encode_g3_1d(img, byte_align=True)], 56, 10, comp=2,
-        rows_per_strip=10,
-    )
-    _, _, _, rgb2 = decode_tiff(blob2)
-    assert np.array_equal(rgb2[:, :, 0], img)
-    blob3 = write_fax_tiff(
-        [encode_g3_1d(img, with_eol=True)], 56, 10, comp=3,
-        rows_per_strip=10,
-    )
-    _, _, _, rgb3 = decode_tiff(blob3)
-    assert np.array_equal(rgb3[:, :, 0], img)
-
-
-def test_tiff_g3_2d_via_t4options():
-    from fund_data_etl_pipeline_spark.operators.tiff_codec import decode_tiff
-
-    img = _text_like(rows=14, cols=64, seed=29)
-    blob = write_fax_tiff(
-        [encode_g3_2d(img, k=3)], 64, 14, comp=3, rows_per_strip=14,
-        t4options=1,
-    )
-    _, _, _, rgb = decode_tiff(blob)
-    assert np.array_equal(rgb[:, :, 0], img)
-
-
 def test_pdf_ccitt_k_positive_mixed():
     from fund_data_etl_pipeline_spark.sources.corpus import (
         _raw_samples_to_pixels,
@@ -551,33 +417,3 @@ def test_pdf_ccitt_k_positive_mixed():
     )
     (rec,) = extract_pdf_images(scanned_pdf([obj]))
     assert np.array_equal(_raw_samples_to_pixels(rec)[..., 0], img)
-
-
-def test_tiff_fax_named_errors():
-    from fund_data_etl_pipeline_spark.operators.tiff_codec import decode_tiff
-
-    img = _text_like(rows=4, cols=16, seed=1)
-    # a truncated strip must quarantine with a named error
-    with pytest.raises(ValueError, match="rows|truncated|invalid"):
-        decode_tiff(write_fax_tiff([encode_g4(img)[:2]], 16, 4, comp=4,
-                                   rows_per_strip=4))
-
-
-def test_fax_tiff_spark_image_path(spark):
-    """A Group-4 fax TIFF flows through the Spark multimodal stage:
-    RIFF-free magic dispatch -> decode_tiff -> the shared fax decoder."""
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image_features,
-    )
-    from fund_data_etl_pipeline_spark.operators.png_codec import mean_luma
-
-    img = _text_like(rows=20, cols=72, seed=43)
-    blob = write_fax_tiff([encode_g4(img)], 72, 20, comp=4,
-                          rows_per_strip=20)
-    rows = [(71, "image", blob, (72, 20, 1, None, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    r = decode_image_features(df, fake=False).collect()[0]
-    assert (r["width"], r["height"]) == (72, 20)
-    rgb = np.repeat(img[:, :, None], 3, axis=2)
-    assert abs(r["mean_luma"] - mean_luma(rgb)) < 1e-9

@@ -1,10 +1,12 @@
-"""Hostile-input contract for the round-6 decoders: random garbage and
-mutated/truncated valid streams must either decode or raise a NAMED
-ValueError — never an IndexError/OverflowError/struct.error leaking out
-of the codec, and never a hang. (The S7 side-channel quarantines any
-exception, but the named-error contract is what makes quarantine rows
-readable, and an unexpected exception class usually marks a real bug —
-the AIFF 80-bit-float OverflowError this test originally caught.)"""
+"""Hostile-input contract for the scanned-PDF decoders (CCITT fax, JPEG,
+the PDF text and image walks) and the standalone media codecs (FLAC,
+AIFF/WAV, PNG, AVI, MP4): random garbage and mutated/truncated valid
+streams must either decode or raise a NAMED ValueError — never an
+IndexError/OverflowError/struct.error leaking out of the codec, and
+never a hang. (The S7 side-channel quarantines any exception, but the
+named-error contract is what makes quarantine rows readable, and an
+unexpected exception class usually marks a real bug — the AIFF
+80-bit-float OverflowError this test originally caught.)"""
 
 from __future__ import annotations
 
@@ -65,38 +67,27 @@ def test_mutated_valid_streams_name_their_errors():
 
 
 def test_older_codecs_mutation_fuzz():
-    """Same contract for the r5/r6 image+audio codecs and the PDF text
+    """Same contract for the PNG, JPEG and WAV decoders and the PDF text
     extractor: bit-flipped and truncated valid streams raise named
     ValueError/NotImplementedError only (this pass originally caught
-    uncaught zlib.error in PNG/PDF Flate, KeyError/struct.error in
-    JPEG, IndexError in TIFF)."""
-    from fund_data_etl_pipeline_spark.operators.bmp_codec import decode_bmp
-    from fund_data_etl_pipeline_spark.operators.gif_codec import decode_gif
+    uncaught zlib.error in PNG/PDF Flate and KeyError/struct.error in
+    JPEG)."""
     from fund_data_etl_pipeline_spark.operators.jpeg_codec import decode_jpeg
     from fund_data_etl_pipeline_spark.operators.png_codec import decode_png
-    from fund_data_etl_pipeline_spark.operators.tiff_codec import decode_tiff
     from fund_data_etl_pipeline_spark.operators.wav_codec import decode_wav
     from fund_data_etl_pipeline_spark.sources.pdf_text import (
         extract_pdf_text,
     )
-    from test_bmp_codec import write_bmp
-    from test_gif_codec import write_gif
     from test_jpeg_codec import encode_jpeg
     from test_pdf_text import simple_pdf
     from test_png_codec import encode_png
-    from test_tiff_codec import write_tiff
     from test_wav_codec import write_wav
 
     rng = np.random.RandomState(3)
     img = rng.randint(0, 256, (12, 16, 3)).astype(np.uint8)
-    pal = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    idx = rng.randint(0, 16, (12, 16)).astype(np.uint8)
     corpora = [
         (decode_png, encode_png(img)),
         (decode_jpeg, encode_jpeg(img)),
-        (decode_gif, write_gif(idx, pal)),
-        (decode_bmp, write_bmp(img)),
-        (decode_tiff, write_tiff(img)),
         (decode_wav, write_wav(np.linspace(-0.5, 0.5, 400)[:, None])),
         (extract_pdf_text, simple_pdf(b"BT (hello) Tj ET", compress=True)),
     ]

@@ -424,3 +424,31 @@ def test_run_report_is_logged(spark, tmp_path, caplog):
     assert "dividend_merged" in logged["empty_outputs"]
     assert not (out / "dividend").exists()
     assert not (out / "dividend_merged").exists()
+
+
+def test_zero_byte_pdf_is_listed_and_decoded(spark, tmp_path):
+    """Spark's binaryFile scan drops zero-length files; the scan lists
+    them itself, so listed = ok + error holds for an empty PDF too. A
+    hidden or non-matching zero-length file stays out."""
+    _doc_id, filename, rel, text = FX.DIVIDEND_DOCS[0]
+    d = tmp_path / "corpus" / rel
+    d.mkdir(parents=True)
+    (d / filename).write_bytes(_cid_pdf(text))
+    for name in ("empty.pdf", ".hidden.pdf", "empty.txt"):
+        (d / name).write_bytes(b"")
+    (d / "_tmp").mkdir()
+    (d / "_tmp" / "staged.pdf").write_bytes(b"")
+
+    scanned = parse_path_metadata(
+        scan_binary_corpus(spark, str(tmp_path / "corpus"), path_keyword="分红")
+    ).collect()
+    assert sorted(r["filename"] for r in scanned) == sorted(
+        [filename, "empty.pdf"])
+    assert {(r["date_partition"], r["category"]) for r in scanned} == {
+        ("20260115", "分红")}
+
+    out = tmp_path / "out"
+    jobs.run_all(spark, str(tmp_path / "corpus"), FX.dim_df(spark),
+                 FX.RUN_DATE, str(out))
+    files = json.loads((out / "_run_report.json").read_text("utf-8"))["files"]
+    assert files["listed"] == 2 == files["ok"] + files["error"]

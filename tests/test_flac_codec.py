@@ -5,7 +5,7 @@ an independently written in-test encoder (RFC 9639 forward direction:
 bit writer, unary/Rice coding, fixed + LPC prediction, stereo
 decorrelation, CRC-8/CRC-16 framing) — covering every subframe type,
 both Rice methods, escape partitions, wasted bits and all three stereo
-modes, plus the Spark audio-feature path."""
+modes."""
 
 from __future__ import annotations
 
@@ -318,24 +318,6 @@ def test_residual_rejects_order_ge_partition_size():
         _residual(_Bits(b"\x00\x00\x00"), blocksize=16, order=16)
     with pytest.raises(ValueError, match="partition order"):
         _residual(_Bits(b"\x00\x00\x00"), blocksize=16, order=20)
-
-
-def test_spark_audio_features_flac_path(spark):
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio_features,
-    )
-
-    s = _tone(1600)
-    blob = encode_flac(s, 16000)
-    rows = [(11, "audio", blob, (None, None, None, 16000, None, None))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    r = decode_audio_features(df, fake=False).collect()[0]
-    assert r["sample_rate"] == 16000 and r["channels"] == 2
-    assert r["n_frames"] == 1600
-    assert abs(r["duration_s"] - 0.1) < 1e-9
-    expected_rms = float(np.sqrt(np.mean((s / 32768.0) ** 2)))
-    assert abs(r["rms"] - expected_rms) < 1e-9
 
 
 def test_roundtrip_property_random_samples():

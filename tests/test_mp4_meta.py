@@ -157,26 +157,3 @@ def test_named_errors():
     blob = video_mp4()
     with pytest.raises(ValueError, match="overruns|truncated|mvhd"):
         read_mp4_meta(blob[: len(blob) - 45])
-
-
-def test_video_meta_real_mp4_path(spark):
-    """The Spark operator must parse REAL MP4 container bytes:
-    duration/dims/frames/fps from the box tree, audio rows filtered."""
-    from fund_data_etl_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_video_meta,
-    )
-
-    blob = video_mp4(w=1280, h=720, frames=60, dur_ms=2500)
-    rows = [
-        (11, "video", blob, (None, None, None, None, None, None)),
-        (12, "audio", b"RIFFxxxxWAVE", (None, None, None, 8000, None, None)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = decode_video_meta(df).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["width"], r["height"]) == (1280, 720)
-    assert r["n_frames"] == 60
-    assert abs(r["duration_s"] - 2.5) < 1e-9
-    assert abs(r["fps"] - 24.0) < 1e-9

@@ -274,12 +274,93 @@ def test_backslash_crlf_continuation_elides_whole_eol():
 
 # --- round-6 upgrades: LZW / ASCIIHex / ASCII85 filters + /ObjStm ---------
 
-def _lzw_pdf_payload(data: bytes) -> bytes:
-    # PDF LZWDecode (EarlyChange default 1) IS the TIFF Section-13
-    # variant — reuse the independent in-test TIFF LZW compressor
-    from tests.test_tiff_codec import _lzw_encode_tiff
+# In-test forward LZW encoder (§7.4.4.2, EarlyChange = 1): MSB-first
+# packing and the "early change" width bump, written independently of
+# the decoder.
 
-    return _lzw_encode_tiff(data)
+class _MSBWriter:
+    def __init__(self):
+        self.acc = 0
+        self.nbits = 0
+        self.out = bytearray()
+
+    def put(self, code, width):
+        self.acc = (self.acc << width) | code
+        self.nbits += width
+        while self.nbits >= 8:
+            self.out.append((self.acc >> (self.nbits - 8)) & 0xFF)
+            self.nbits -= 8
+            self.acc &= (1 << self.nbits) - 1
+
+    def flush(self):
+        if self.nbits:
+            self.out.append((self.acc << (8 - self.nbits)) & 0xFF)
+        return bytes(self.out)
+
+
+def _lzw_pdf_payload(data: bytes) -> bytes:
+    CLEAR, EOI = 256, 257
+    w = _MSBWriter()
+
+    def fresh():
+        return {bytes([i]): i for i in range(256)}, 258, 9
+
+    table, next_code, width = fresh()
+    w.put(CLEAR, width)
+    run = b""
+    for byte in data:
+        cand = run + bytes([byte])
+        if cand in table:
+            run = cand
+            continue
+        w.put(table[run], width)
+        table[cand] = next_code
+        # early change: the bump keys on the just-ASSIGNED entry index
+        # reaching 2^width - 1 (one earlier than GIF's 2^width)
+        if next_code == (1 << width) - 1 and width < 12:
+            width += 1
+        next_code += 1
+        if next_code >= 4094:
+            w.put(CLEAR, width)
+            table, next_code, width = fresh()
+        run = bytes([byte])
+    if run:
+        w.put(table[run], width)
+    w.put(EOI, width)
+    return w.flush()
+
+
+def test_lzw_roundtrip_smooth_and_random():
+    import numpy as np
+
+    from fund_data_etl_pipeline_spark.sources.pdf_text import unpack_lzw
+
+    # low-entropy drives dictionary growth; random exercises literals
+    for seed, smooth in ((8, True), (9, False)):
+        rng = np.random.default_rng(seed)
+        if smooth:
+            img = np.repeat(
+                rng.integers(0, 8, size=(30, 10, 3), dtype=np.uint8) * 31,
+                4, axis=1,
+            )
+        else:
+            img = rng.integers(0, 256, size=(30, 40, 3), dtype=np.uint8)
+        data = img.tobytes()
+        assert unpack_lzw(_lzw_pdf_payload(data)) == data
+
+
+def test_lzw_width_bumps_and_mid_stream_clear():
+    import numpy as np
+
+    from fund_data_etl_pipeline_spark.sources.pdf_text import unpack_lzw
+
+    # random bytes add about one table entry per input byte, so 14,400
+    # of them push the table through the 9->12-bit width bumps and the
+    # 4094-entry mid-stream Clear more than once
+    data = np.random.default_rng(10).integers(
+        0, 256, size=60 * 80 * 3, dtype=np.uint8
+    ).tobytes()
+    assert unpack_lzw(_lzw_pdf_payload(data)) == data
 
 
 def test_lzw_filter_roundtrip():

@@ -4,9 +4,9 @@ Builds every registered query at a small SF and inspects the PHYSICAL
 plan (no execution beyond what eager builders do): per-query operator
 census plus hard scale-hygiene gates:
 
-- ``BatchEvalPython`` (row-wise Python UDF) — forbidden everywhere; the
-  only sanctioned Python is Arrow-batched (``ArrowEvalPython`` /
-  ``MapInPandas``), and only in the multimodal codec queries.
+- ``BatchEvalPython`` (row-wise Python UDF) and Arrow-batched Python
+  (``ArrowEvalPython`` / ``MapInPandas``) — forbidden in every registered
+  query's returned plan.
 - ``CartesianProduct`` / all-pairs joins — allowed only in the labeled
   brute-force verification baselines and the replication probe.
 - ``InMemoryTableScan`` in a RETURNED plan — allowed only where the
@@ -86,9 +86,6 @@ PERSIST_OK = {
     # vector_ann_ivf entry above; the INDEX itself reads from parquet)
     "vector_ann_ivf_indexed",
 }
-# Arrow-batched Python is the sanctioned slow path, only where the
-# operator is genuinely non-relational (media codecs)
-ARROW_OK = {"multimodal_binary_stats"}
 
 
 def check_persist_sources() -> list[str]:
@@ -150,9 +147,7 @@ def audit(sf_dir: str, names: list[str] | None = None) -> int:
         if "BatchEvalPython" in plan:
             flags.append("ROW-UDF")
             bad.append(f"{name}: row-wise Python UDF (BatchEvalPython)")
-        if ("ArrowEvalPython" in plan or "MapInPandas" in plan) and (
-            name not in ARROW_OK
-        ):
+        if "ArrowEvalPython" in plan or "MapInPandas" in plan:
             flags.append("ARROW?")
             bad.append(f"{name}: unexpected Arrow-Python stage")
         if "CartesianProduct" in plan and name not in CROSS_OK:
